@@ -91,7 +91,7 @@ def _nn_resize(arr, out_w: int, out_h: int):  # type: ignore[no-untyped-def]
 def media_table(documents: DataFrame) -> DataFrame:
     """documents → media table: the text bytes stand in for an opaque
     payload; metadata is typed. Real pipelines load payloads via
-    ``binaryFile`` scans exactly like sources/pcap.py does."""
+    ``binaryFile`` scans, as sources/pcapng.py does."""
     return documents.select(
         F.col("doc_id").alias("media_id"),
         F.encode("text", "UTF-8").alias("payload"),

@@ -141,7 +141,7 @@ def pcap_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     API: ``spark.read.format("pcap")`` over the golden fixture —
     the connector form of q_pcap_pipeline (same decode kernels behind
     the standard source interface; partition-per-chunk parallelism).
-    Row-for-row parity with read_pcap is pinned in
+    Row-for-row parity with the scalar decoder is pinned in
     tests/test_pcap_datasource.py."""
     from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 

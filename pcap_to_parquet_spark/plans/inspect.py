@@ -48,8 +48,9 @@ def plan_string(df: DataFrame) -> str:
 
 
 def plan_profile(df: DataFrame) -> dict[str, int]:
-    """Operator counts plus ``exchanges``, ``wscg_spans`` and
-    ``pushed_filters`` for the DataFrame's physical plan."""
+    """Operator counts plus ``exchanges``, ``python_scans``,
+    ``wscg_spans`` and ``pushed_filters`` for the DataFrame's physical
+    plan."""
     plan = plan_string(df)
     prof: Counter[str] = Counter()
     for op in NOTABLE_OPS:
@@ -57,6 +58,9 @@ def plan_profile(df: DataFrame) -> dict[str, int]:
         if n:
             prof[op] = n
     prof["exchanges"] = len(re.findall(r"\bExchange\b", plan))
+    # Python Data Source scans (e.g. format("pcap")): the decode runs
+    # inside the scan, so this counts decode passes over the input
+    prof["python_scans"] = len(re.findall(r"\bBatchScan \w+\[[^\]]*\] \(Python\)", plan))
     # deliberate parallelism fan-outs (fan_out's repartition): these
     # are row-preserving round-robin redistributions, not keyed data
     # shuffles — plan tests asserting "no shuffle" should compare

@@ -17,22 +17,24 @@ Deliberate divergence (SURVEY §2.2): malformed/truncated packets never
 raise — fields stay NULL (the reference panics on slice overruns,
 main.rs:190-191,237).
 
-Execution model: ``binaryFile`` scan → vectorized numpy decode
-(sources/pcap_vec.py) → JVM-side finishing. Parallelism is per-file
-here; single large captures get intra-file chunked parallelism via
-``sources.pcap_chunked.read_pcap_chunked``. The decoded table is then
-plain column algebra — Catalyst sees through everything downstream.
+This module holds the scalar decoder — the semantic reference the
+vectorized kernel (sources/pcap_vec.py) is property-tested against —
+and the Spark entry points. Execution model: ``read_pcap`` and
+``convert_pcap`` are thin wrappers over ``spark.read.format("pcap")``
+(sources/pcap_datasource.py), the one physical reader: byte-range
+partitions with boundary resync (sources/pcap_chunked.py), sized by
+``_auto_chunk_bytes``, decoded and finished to Arrow in the Python
+worker. The decoded table is then plain column algebra — Catalyst sees
+through everything downstream.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from pcap_to_parquet_spark.session import tune
 
 # legacy pcap magic numbers: (byte order, timestamp unit). pcapng
 # (0x0a0d0d0a) is NOT here — unsupported, as in the reference (main.rs:108).
@@ -268,147 +270,79 @@ def decode_pcap_bytes(buf: bytes, ipv6: bool = False) -> list[dict[str, Any]]:
 
 
 # ---------------------------------------------------------------------------
-# Spark pipeline
+# Spark pipeline: thin wrappers over the ``format("pcap")`` data source
+# (sources/pcap_datasource.py), the one physical pcap reader.
 
 
-_RAW_DECODE_SCHEMA = (
-    "src_u32 long, dst_u32 long, len long, proto long, "
-    "src_port int, dst_port int, mm_ts long, mm_id int, mm_port short"
-)
-# opt-in IPv6 mode adds the pre-formatted v6 text columns (canonical
-# RFC 5952 addresses + next-header name); v4 rows leave them NULL and
-# the finisher coalesces the two stacks into PACKET_SCHEMA
-_RAW_DECODE_SCHEMA_V6 = _RAW_DECODE_SCHEMA + ", src6 string, dst6 string, proto6 string"
-
-
-def _arrays_to_pandas(a: dict):  # type: ignore[no-untyped-def]
-    """Columnar decode arrays → one Arrow-ready pandas batch. Nullable
-    ints ride pandas extension arrays end-to-end: a plain int-with-None
-    column silently becomes float64 and corrupts ns-scale timestamps
-    (int64 > 2^53)."""
-    import numpy as np
-    import pandas as pd
-
-    def masked(values, valid, dtype):  # noqa: ANN001
-        return pd.arrays.IntegerArray(values.astype(dtype), mask=~valid)
-
-    n = len(a["len"])
-    all_valid = np.ones(n, dtype=bool)
-    cols = {
-        "src_u32": masked(a["src_u32"], a["ip_valid"], np.int64),
-        "dst_u32": masked(a["dst_u32"], a["ip_valid"], np.int64),
-        "len": masked(a["len"], all_valid, np.int64),
-        "proto": masked(a["proto"], a["proto_valid"], np.int64),
-        "src_port": masked(a["src_port"], a["ports_valid"], np.int32),
-        "dst_port": masked(a["dst_port"], a["ports_valid"], np.int32),
-        "mm_ts": masked(a["mm_ts"], a["mm_valid"], np.int64),
-        "mm_id": masked(a["mm_id"], a["mm_valid"], np.int32),
-        "mm_port": masked(a["mm_port"].astype(np.int16), a["mm_valid"], np.int16),
-    }
-    if "src6" in a:
-        cols["src6"] = pd.array(a["src6"], dtype="string")
-        cols["dst6"] = pd.array(a["dst6"], dtype="string")
-        cols["proto6"] = pd.array(a["proto6"], dtype="string")
-    return pd.DataFrame(cols)
-
-
-def _finish_packets(raw: DataFrame, ipv6: bool = False) -> DataFrame:
-    """Numeric decode columns → PACKET_SCHEMA, JVM-side (dotted-quad
-    formatting and protocol naming stay in whole-stage codegen). In
-    ``ipv6`` mode the pre-formatted v6 text columns coalesce in — a
-    row is v4 or v6, never both, so the coalesce is exact."""
-
-    def dotted(col: str):  # u32 → "a.b.c.d", codegen'd JVM string build
-        c = F.col(col)
-        octets = [
-            F.shiftrightunsigned(c, s).bitwiseAND(F.lit(255)).cast("string")
-            for s in (24, 16, 8, 0)
-        ]
-        return F.when(c.isNotNull(), F.concat_ws(".", *octets))
-
-    proto_name = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _PROTOCOL_NAMES.items() for x in kv]),
-        F.col("proto").cast("int"),
-    )
-    src_ip, dst_ip = dotted("src_u32"), dotted("dst_u32")
-    if ipv6:
-        src_ip = F.coalesce(src_ip, F.col("src6"))
-        dst_ip = F.coalesce(dst_ip, F.col("dst6"))
-        proto_name = F.coalesce(proto_name, F.col("proto6"))
-    return raw.select(
-        src_ip.alias("src_ip"),
-        dst_ip.alias("dst_ip"),
-        F.col("len"),
-        proto_name.alias("protocol"),
-        F.col("src_port"),
-        F.col("dst_port"),
-        F.col("mm_ts"),
-        F.col("mm_id"),
-        F.col("mm_port"),
-    )
-
-
-def read_pcap(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcap file(s)/glob → packets DataFrame (PACKET_SCHEMA).
-
-    binaryFile scan (one task per file) → vectorized numpy decode
-    (sources/pcap_vec.py) emitting numeric columns via Arrow →
-    JVM-side finishing. For single large captures use
-    ``sources.pcap_chunked.read_pcap_chunked`` (intra-file
-    parallelism, O(chunk) task memory).
-
-    ``ipv6=True`` additionally decodes ethertype 0x86DD (plain and
-    VLAN-tagged): canonical RFC 5952 addresses into src_ip/dst_ip,
-    the extension-header chain walked to the real L4 (see
-    ``_parse_ipv6``), next-header names {TCP, UDP, ICMPv6} into
-    protocol, TCP/UDP ports at the post-chain offset. Same
-    PACKET_SCHEMA either way. Default False = byte-identical
-    reference parity (the reference NULLs IPv6, main.rs:239-251).
-    """
-    tune(spark)
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def decode_files(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield _arrays_to_pandas(decode_pcap_arrays(bytes(content), ipv6))
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = files.mapInPandas(decode_files, schema=schema)
-    return _finish_packets(raw, ipv6)
-
-
-# auto-chunk policy: captures above this size decode via the chunked
-# reader (measured local[32], 73 MB/1M packets: 5.6 s per-file vs 1.5 s
-# chunked; r16: 17 MB/250k packets 1.57 s per-file vs 1.06 s at 8 MiB
-# chunks, and the parquet write parallelizes with the decode tasks).
-# Below ~2 chunks' worth of the 8 MiB floor there is nothing to split:
-# per-chunk resync slack IO eats the gain.
+# Chunk-size policy. Captures up to the threshold decode whole: below
+# ~2 chunks' worth of the 8 MiB floor there is nothing to split, and
+# per-chunk resync slack IO eats the gain. Measured local[32]: 73 MB/1M
+# packets 5.6 s whole-file vs 1.5 s chunked; 17 MB/250k packets 1.57 s
+# vs 1.06 s at 8 MiB chunks (the parquet write parallelizes with the
+# decode tasks).
 _AUTO_CHUNK_THRESHOLD = 16 << 20
 _MIN_CHUNK = 8 << 20
 
 
-def _auto_chunk_bytes(spark: SparkSession, in_path: str) -> int | None:
-    """Chunk size for big single-file captures, else None (per-file).
+def _auto_chunk_bytes(size: int, parallelism: int | None) -> int:
+    """Chunk size for captures whose largest file has ``size`` bytes;
+    0 means one partition per file.
 
-    Chunks sized ``max(largest_file / parallelism, 8 MiB)``: smaller
-    chunks stop helping once every core has work, and each chunk pays
-    a fixed resync-slack read (~2 MB) that small chunks drown in."""
-    from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+    With a session's ``parallelism`` the records split into that many
+    equal chunks, floored at ``_MIN_CHUNK``: smaller chunks stop
+    helping once every core has work, and each chunk pays a fixed
+    resync-slack read (~2 MB) that small chunks drown in. A bare
+    ``format("pcap")`` load has no session (``None``) and splits at
+    the threshold itself."""
+    if size <= _AUTO_CHUNK_THRESHOLD:
+        return 0
+    if parallelism is None:
+        return _AUTO_CHUNK_THRESHOLD
+    return max(-(-(size - _GLOBAL_HEADER_LEN) // max(parallelism, 1)), _MIN_CHUNK)
 
-    try:
-        import os
 
-        sizes = {os.path.getsize(f) for f, _s, _e in chunk_specs(in_path, 1 << 62)}
-    except Exception:  # noqa: BLE001 - unreadable paths fall to per-file reader
-        return None
-    biggest = max(sizes, default=0)
-    if biggest <= _AUTO_CHUNK_THRESHOLD:
-        return None
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    return max(biggest // par, _MIN_CHUNK)
+def read_pcap(
+    spark: SparkSession,
+    path: str,
+    ipv6: bool = False,
+    chunk_bytes: int | None = None,
+    ts_tol: int | None = None,
+) -> DataFrame:
+    """pcap file(s)/directory/glob → packets DataFrame (PACKET_SCHEMA):
+    ``spark.read.format("pcap")`` with one input partition per byte-range
+    chunk of each capture, vectorized numpy decode (sources/pcap_vec.py)
+    and a pyarrow finisher, both in the Python worker.
+
+    ``chunk_bytes``: ``None`` (default) sizes chunks from the largest
+    file and the session's ``defaultParallelism`` (``_auto_chunk_bytes``:
+    whole files up to {threshold} MiB); ``0`` reads every file whole; an
+    int forces that chunk size. Chunk boundaries resync on record headers
+    (sources/pcap_chunked.py) anchored ±``ts_tol`` seconds (default
+    48 h) around the file's first record; raise it for longer captures.
+
+    ``ipv6=True`` additionally decodes ethertype 0x86DD (plain and
+    VLAN-tagged): canonical RFC 5952 addresses into src_ip/dst_ip,
+    the extension-header chain walked to the real L4 (see
+    ``_parse_ipv6``), next-header names {{TCP, UDP, ICMPv6}} into
+    protocol, TCP/UDP ports at the post-chain offset. Same
+    PACKET_SCHEMA either way. Default False = byte-identical
+    reference parity (the reference NULLs IPv6, main.rs:239-251).
+    """
+    from pcap_to_parquet_spark.sources.pcap_chunked import capture_files
+    from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
+
+    register_pcap_source(spark)
+    if chunk_bytes is None:
+        size = max(os.path.getsize(f) for f in capture_files(path))
+        chunk_bytes = _auto_chunk_bytes(size, spark.sparkContext.defaultParallelism)
+    # bytes / 2**20 is exact in a float and repr() round-trips it
+    reader = spark.read.format("pcap").option("chunk_mb", repr(chunk_bytes / (1 << 20)))
+    if ts_tol is not None:
+        reader = reader.option("ts_tol_hours", repr(ts_tol / 3600))
+    return reader.option("ipv6", str(ipv6).lower()).load(path)
+
+
+read_pcap.__doc__ = read_pcap.__doc__.format(threshold=_AUTO_CHUNK_THRESHOLD >> 20)
 
 
 def convert_pcap(
@@ -429,58 +363,26 @@ def convert_pcap(
     packet lake queried by protocol/day reads only matching
     directories — the scan's PartitionFilters, not post-hoc filters.
 
-    ``chunk_bytes``: ``None`` (default) auto-selects — per-file decode
-    normally, the chunked reader (intra-file parallelism, deterministic
-    boundary resync) when any input file exceeds 64 MiB. An explicit
-    int forces chunked at that size; ``0`` forces per-file (e.g. for
-    captures spanning more than the chunked reader's ±48 h timestamp
-    anchor, which fail loud rather than resync wrong).
-
-    ``ts_tol`` (seconds) widens that resync anchor for long captures —
-    the remedy the chunked reader's error message names, reachable
-    here and via the CLI's ``--ts-tol-hours`` so auto-chunked big
-    captures never dead-end.
-
-    Auto-selection must never make a valid capture fail that per-file
-    decode handles (e.g. one spanning more than ±ts_tol): if the
-    AUTO-chunked write dies on a resync ``PcapFormatError``, it falls
-    back to per-file decode and succeeds. An explicit ``chunk_bytes``
-    keeps fail-loud — the caller asked for chunked semantics.
-
-    ``ipv6=True`` decodes 0x86DD too (see ``read_pcap``) on either
-    physical path — per-file and chunked readers share the vectorized
-    decode kernel, so the flag composes with ``chunk_bytes`` (record
-    resync anchors on pcap record headers, never packet contents).
+    ``chunk_bytes``, ``ts_tol`` and ``ipv6`` are ``read_pcap``'s (CLI:
+    ``--chunk-mb``, ``--ts-tol-hours``, ``--ipv6``). Auto chunking must
+    never make a valid capture fail that whole-file decode handles
+    (e.g. one spanning more than ±ts_tol): if the auto-chunked write
+    dies on a resync ``PcapFormatError``, the same reader reruns with
+    whole-file partitions. An explicit ``chunk_bytes`` keeps fail-loud —
+    the caller asked for chunked semantics.
     """
-    auto = chunk_bytes is None
-    if auto:
-        chunk_bytes = _auto_chunk_bytes(spark, in_path)
-    if chunk_bytes:
-        from pcap_to_parquet_spark.sources.pcap_chunked import (
-            _TS_TOL,
-            read_pcap_chunked,
-        )
-
-        df = read_pcap_chunked(
-            spark,
-            in_path,
-            chunk_bytes,
-            ts_tol if ts_tol is not None else _TS_TOL,
-            ipv6,
-        )
-    else:
-        df = read_pcap(spark, in_path, ipv6)
+    df = read_pcap(spark, in_path, ipv6, chunk_bytes, ts_tol)
     try:
         _write_packets(df, out_path, partition_cols)
     except Exception as exc:  # noqa: BLE001 - executor errors arrive as Py4J wrappers
         # The resync failure surfaces at the write action, wrapped by
         # Py4J; match its message rather than type. Scoped to the
         # RESYNC error specifically: a corrupt-region PcapFormatError
-        # would fail per-file too, so falling back there only re-decodes
-        # a doomed capture and masks the sharper chunked diagnostic.
-        if not (auto and chunk_bytes and "cannot resynchronize" in str(exc)):
+        # would fail whole-file too, so falling back there only
+        # re-decodes a doomed capture and masks the sharper diagnostic.
+        if not (chunk_bytes is None and "cannot resynchronize" in str(exc)):
             raise
-        _write_packets(read_pcap(spark, in_path, ipv6), out_path, partition_cols)
+        _write_packets(read_pcap(spark, in_path, ipv6, chunk_bytes=0), out_path, partition_cols)
 
 
 def _write_packets(df: DataFrame, out_path: str, partition_cols: list[str] | None) -> None:

@@ -1,9 +1,9 @@
-"""Intra-file pcap parallelism: chunked reads with boundary resync.
+"""Intra-file pcap parallelism: byte-range chunks with boundary resync.
 
-``binaryFile`` gives one task per file, which is the right shape for
-many small captures but serializes a single 10 GB capture onto one
-core (and materializes the whole file in one task). This reader
-splits each file into byte-range chunks decoded in parallel:
+The ``format("pcap")`` reader (sources/pcap_datasource.py) turns each
+``chunk_specs`` range into one input partition, so a single 10 GB
+capture fans out across the cluster instead of serializing onto one
+core, and no task ever holds more than one chunk:
 
 - chunk boundaries are arbitrary byte offsets; each task *resyncs* to
   the first real record header at-or-after its start offset by
@@ -26,8 +26,6 @@ from __future__ import annotations
 
 import os
 from glob import glob
-
-from pyspark.sql import DataFrame, SparkSession
 
 from pcap_to_parquet_spark.sources.pcap import (
     _GLOBAL_HEADER_LEN,
@@ -60,8 +58,8 @@ def _plausible(
     just past its data; else None. Plausibility anchors the timestamp
     to the file's first record (±ts_tol): periodic or random payloads
     can fake self-consistent header chains, but faking the capture's
-    own narrow epoch window takes adversarial data — for which the
-    per-file reader remains the safe path."""
+    own narrow epoch window takes adversarial data — for which
+    whole-file reads (``chunk_bytes=0``) remain the safe path."""
     if o + _RECORD_HEADER_LEN > n:
         return None
     ts = int.from_bytes(buf[o : o + 4], order)
@@ -146,30 +144,42 @@ def sync_offset(
     return None
 
 
-def chunk_specs(path: str, chunk_bytes: int) -> list[tuple[str, int, int]]:
-    """(path, start, end) byte ranges per file; start=24 for the first.
+def capture_files(path: str) -> list[str]:
+    """The files a file, directory or glob ``path`` names, sorted.
 
-    Directories are listed non-recursively with subdirectories and
-    other non-files skipped (parity with the binaryFile scan). A valid
-    header-only capture contributes zero specs (→ empty DataFrame);
-    only a path that matches no files at all is an error."""
+    Directories are listed non-recursively; subdirectories, other
+    non-files and hidden files (``.``/``_`` prefixed, e.g. ``_SUCCESS``)
+    are skipped, as Spark's file sources do. Only a path that matches
+    no files at all is an error."""
     if any(c in path for c in "*?["):
         candidates = sorted(glob(path))
     elif os.path.isdir(path):
-        candidates = sorted(os.path.join(path, f) for f in os.listdir(path))
+        candidates = sorted(
+            os.path.join(path, f) for f in os.listdir(path) if not f.startswith((".", "_"))
+        )
     else:
         candidates = [path]
     files = [f for f in candidates if os.path.isfile(f)]
     if not files:
         raise PcapFormatError(f"no pcap files under {path!r}")
+    return files
+
+
+def chunk_specs(path: str, chunk_bytes: int) -> list[tuple[str, int, int]]:
+    """(path, start, end) byte ranges per file; start=24 for the first.
+
+    ``chunk_bytes`` = 0 gives one range per file. Every file gets at
+    least one range, so a header-only capture decodes to zero rows and
+    a file too short for a pcap header fails loud, as whole-file decode
+    does."""
+    if chunk_bytes < 0:
+        raise ValueError(f"chunk_bytes must be >= 0, got {chunk_bytes}")
     specs: list[tuple[str, int, int]] = []
-    for f in files:
+    for f in capture_files(path):
         size = os.path.getsize(f)
-        start = _GLOBAL_HEADER_LEN
-        while start < size:
-            end = min(start + chunk_bytes, size)
-            specs.append((f, start, end))
-            start = end
+        step = chunk_bytes or max(size, 1)
+        starts = range(_GLOBAL_HEADER_LEN, size, step) or [_GLOBAL_HEADER_LEN]
+        specs.extend((f, s, min(s + step, size)) for s in starts)
     return specs
 
 
@@ -180,7 +190,7 @@ def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> byte
     A sync failure (bytes present but no validated record header in
     the window) is tolerated only when the unparseable region fits
     inside one truncated final record's envelope at EOF — the case the
-    per-file reader also drops silently. Anywhere else it fails LOUD:
+    whole-file decode also drops silently. Anywhere else it fails LOUD:
     the old fallback (decode from the window cap) silently produced
     garbage/dropped rows whenever a capture spanned more than ±ts_tol
     of its first record or a mid-file region was corrupt."""
@@ -215,8 +225,8 @@ def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> byte
                 f"cannot resynchronize {what} at {path}:{abs_start}: records "
                 f"found whose timestamps exceed ±{ts_tol}s of the file's first "
                 "record — the capture outlives the plausibility anchor; pass a "
-                "larger ts_tol to read_pcap_chunked (CLI: --ts-tol-hours) or "
-                "use read_pcap / per-file decode (CLI: --chunk-mb 0)"
+                "larger ts_tol to read_pcap (CLI: --ts-tol-hours) or read whole "
+                "files with chunk_bytes=0 (CLI: --chunk-mb 0)"
             )
         if file_size - abs_start <= tail_envelope:
             # no records even at wide tolerance, and the region fits one
@@ -227,7 +237,7 @@ def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> byte
         raise PcapFormatError(
             f"cannot resynchronize {what} at {path}:{abs_start}: no valid record "
             f"header in a {_SYNC_WINDOW}-byte window — corrupt or non-pcap "
-            "region; use read_pcap / per-file decode (CLI: --chunk-mb 0)"
+            "region; read whole files with chunk_bytes=0 (CLI: --chunk-mb 0)"
         )
 
     lo = _resolve(0, start, "chunk start") if start > _GLOBAL_HEADER_LEN else 0
@@ -248,51 +258,8 @@ def decode_chunk(path: str, start: int, end: int, ts_tol: int = _TS_TOL) -> byte
                 # drop here would lose data, so fail loud
                 raise PcapFormatError(
                     f"record at {path}:{start + pos} has incl_len > {_MAX_INCL} "
-                    "bytes; chunked mode caps record size — use read_pcap"
+                    "bytes; chunked mode caps record size — use chunk_bytes=0"
                 )
             break  # truncated straddler (true EOF tail): drop, parity with splitter
         pos = nxt
     return header + buf[lo:pos]
-
-
-def read_pcap_chunked(
-    spark: SparkSession,
-    path: str,
-    chunk_bytes: int = 64 * 1024 * 1024,
-    ts_tol: int = _TS_TOL,
-    ipv6: bool = False,
-) -> DataFrame:
-    """pcap file(s) → packets DataFrame with intra-file parallelism:
-    one task per ``chunk_bytes`` byte range. Same output as
-    ``read_pcap`` (tests assert row-set equality), different physical
-    shape: a single large capture fans out across the cluster.
-
-    ``ipv6=True`` enables the opt-in 0x86DD decode (see ``read_pcap``)
-    inside the same chunked kernel — resync is L2-agnostic (it anchors
-    on record headers, not packet contents), so the boundary contract
-    is unchanged. Default False = reference parity (main.rs:239-251)."""
-    from pcap_to_parquet_spark.sources.pcap import (
-        _finish_packets,
-        _RAW_DECODE_SCHEMA,
-        _RAW_DECODE_SCHEMA_V6,
-    )
-    from pcap_to_parquet_spark.session import tune
-
-    tune(spark)
-    specs = chunk_specs(path, chunk_bytes)
-    sdf = spark.createDataFrame(specs, "path string, start long, end long").repartition(
-        max(len(specs), 1)
-    )
-
-    def decode_specs(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap import _arrays_to_pandas
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
-
-        for pdf in batches:
-            for path_, start_, end_ in zip(pdf["path"], pdf["start"], pdf["end"]):
-                buf = decode_chunk(path_, int(start_), int(end_), ts_tol)
-                yield _arrays_to_pandas(decode_pcap_arrays(buf, ipv6))
-
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = sdf.mapInPandas(decode_specs, schema=schema)
-    return _finish_packets(raw, ipv6)

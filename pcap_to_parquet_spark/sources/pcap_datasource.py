@@ -1,25 +1,26 @@
-"""pcap as a first-class Spark data source: ``spark.read.format("pcap")``.
+"""pcap as a first-class Spark data source: ``spark.read.format("pcap")``,
+the engine's one physical pcap reader (``read_pcap``/``convert_pcap``
+in sources/pcap.py are thin wrappers over it).
 
 The Spark 4 Python Data Source API gives the reference capability its
-idiomatic connector form (reference CLI: /root/reference/src/main.rs:59-61):
+idiomatic connector form (reference CLI: main.rs:59-61):
 
 - **batch**: ``spark.read.format("pcap").load(path)`` — one input
   partition per chunk of each capture (``chunk_specs``), so a single
-  large file parallelizes across the cluster exactly like the chunked
-  reader; small files get one partition each. Partitions decode with
-  the same vectorized numpy kernels as ``read_pcap`` and yield Arrow
-  record batches (zero row-at-a-time Python).
+  large file parallelizes across the cluster; small files get one
+  partition each. Partitions decode with the vectorized numpy kernel
+  (sources/pcap_vec.py) and finish to Arrow record batches with
+  pyarrow compute — no per-packet Python.
 - **streaming**: ``spark.readStream.format("pcap").load(dir)`` — a
   landing-directory tail: each micro-batch decodes the files that
   arrived since the last committed offset (offset = sorted seen-file
   list), giving the capture-directory → packets table pipeline a
   Structured Streaming front end.
 
-Options: ``chunk_mb`` (0 = one partition per file; default auto:
-chunked over 64 MiB), ``ts_tol_hours`` (resync anchor, chunked mode).
-
-``read_pcap`` / ``read_pcap_chunked`` remain the plain-API fast path;
-the connector is the same decode behind the standard source interface.
+Options: ``chunk_mb`` (MiB, fractional allowed; 0 = one partition per
+file; default: whole files up to {threshold} MiB, {threshold} MiB chunks
+above — ``_auto_chunk_bytes`` without a session), ``ts_tol_hours``
+(resync anchor, chunked mode), ``ipv6``.
 """
 
 from __future__ import annotations
@@ -36,12 +37,16 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-PACKET_DDL = (
-    "src_ip string, dst_ip string, len bigint, protocol string, "
-    "src_port int, dst_port int, mm_ts bigint, mm_id int, mm_port smallint"
+from pcap_to_parquet_spark.schema import PACKET_SCHEMA
+from pcap_to_parquet_spark.sources.pcap import (
+    _AUTO_CHUNK_THRESHOLD,
+    _GLOBAL_HEADER_LEN,
+    _PROTOCOL_NAMES,
+    _auto_chunk_bytes,
 )
+from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL
 
-_PROTOCOL_NAMES = {1: "ICMP", 2: "IGMP", 6: "TCP", 17: "UDP"}
+__doc__ = __doc__.format(threshold=_AUTO_CHUNK_THRESHOLD >> 20)
 
 
 class PcapPartition(InputPartition):
@@ -64,6 +69,20 @@ _PUSH_COLS = {
 }
 
 
+def _protocol_names(a, ipv6):  # type: ignore[no-untyped-def]
+    """Per-packet protocol name as an Arrow string array: a ``take``
+    into a 256-entry name table; in ipv6 mode the v6 next-header names
+    coalesce in (a row is v4 or v6, never both)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    table = pa.array([_PROTOCOL_NAMES.get(p) for p in range(256)], type=pa.string())
+    names = table.take(pa.array(a["proto"], mask=~a["proto_valid"]))
+    if ipv6:
+        names = pc.coalesce(pa.array(a["proto6"], type=pa.string()), names)
+    return names
+
+
 def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
     """AND of pushed filters as one numpy mask over the decoded arrays
     (SQL semantics: a NULL column value never satisfies a comparison).
@@ -83,19 +102,10 @@ def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
         LessThanOrEqual,
     )
 
-    proto_names = None
     if ipv6:
-        proto_names = np.array(
-            [
-                a["proto6"][i]
-                if a["proto6"][i] is not None
-                else (_PROTOCOL_NAMES.get(int(a["proto"][i])) if a["proto_valid"][i] else None)
-                for i in range(len(a["len"]))
-            ],
-            dtype=object,
-        )
-        proto_valid6 = np.array([x is not None for x in proto_names], dtype=bool)
-        proto_names = np.where(proto_valid6, proto_names, "")
+        names = _protocol_names(a, ipv6)
+        proto_valid6 = names.is_valid().to_numpy(zero_copy_only=False)
+        proto_names = names.fill_null("").to_numpy(zero_copy_only=False)
 
     mask = np.ones(len(a["len"]), dtype=bool)
     for f in filters:
@@ -134,17 +144,18 @@ def _filter_mask(a, filters, ipv6=False):  # type: ignore[no-untyped-def]
 
 
 def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-untyped-def]
-    """One in-memory capture → one Arrow RecordBatch (PACKET_DDL).
+    """One in-memory capture → one Arrow RecordBatch (PACKET_SCHEMA).
 
-    The numeric decode is the shared vectorized kernel; only the
-    dotted-quad/protocol-name formatting happens here (the connector
-    yields final strings; read_pcap defers that to JVM codegen).
-    Pushed filters apply as a numpy mask BETWEEN decode and string
-    formatting — pruned packets never materialize Python strings and
-    never cross the Arrow boundary. ``ipv6`` merges the v6 text
-    columns into the same output fields (same opt-in as read_pcap)."""
-    import numpy as np
+    The numeric decode is the shared vectorized kernel; this finisher
+    is pyarrow compute over whole columns: dotted quads join four
+    string-cast octet arrays, protocol names are a table ``take``,
+    nullable ints carry their validity as an Arrow mask (never a float
+    detour that would corrupt ns-scale int64 timestamps). Pushed
+    filters apply as a numpy mask BETWEEN decode and finishing, so
+    pruned packets never cross the Arrow boundary. ``ipv6`` coalesces
+    the v6 text columns into the same output fields."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
 
@@ -152,65 +163,45 @@ def _decode_to_arrow(buf: bytes, filters=(), ipv6=False):  # type: ignore[no-unt
     if filters:
         keep = _filter_mask(a, filters, ipv6)
         a = {k: v[keep] for k, v in a.items()}
-    n = len(a["len"])
+    ip_valid = pa.array(a["ip_valid"])
+    no_ip = pa.scalar(None, type=pa.string())
 
-    def dotted(u32: np.ndarray, valid: np.ndarray) -> list:
-        out: list = [None] * n
-        for i in np.flatnonzero(valid):
-            v = int(u32[i])
-            out[i] = f"{(v >> 24) & 255}.{(v >> 16) & 255}.{(v >> 8) & 255}.{v & 255}"
-        return out
+    def dotted(u32, v6_key):  # type: ignore[no-untyped-def]
+        octets = [pc.cast(pa.array((u32 >> s) & 255), pa.string()) for s in (24, 16, 8, 0)]
+        quad = pc.if_else(ip_valid, pc.binary_join_element_wise(*octets, "."), no_ip)
+        return pc.coalesce(pa.array(a[v6_key], type=pa.string()), quad) if ipv6 else quad
 
-    proto: list = [None] * n
-    for i in np.flatnonzero(a["proto_valid"]):
-        proto[i] = _PROTOCOL_NAMES.get(int(a["proto"][i]))
-    src, dst = dotted(a["src_u32"], a["ip_valid"]), dotted(a["dst_u32"], a["ip_valid"])
-    if ipv6:
-        for i in range(n):
-            if a["src6"][i] is not None:
-                src[i], dst[i] = a["src6"][i], a["dst6"][i]
-            if a["proto6"][i] is not None:
-                proto[i] = a["proto6"][i]
+    def nullable(key, valid, typ):  # type: ignore[no-untyped-def]
+        return pa.array(a[key].astype(typ), mask=~a[valid])
 
     return pa.record_batch(
         [
-            pa.array(src, type=pa.string()),
-            pa.array(dst, type=pa.string()),
+            dotted(a["src_u32"], "src6"),
+            dotted(a["dst_u32"], "dst6"),
             pa.array(a["len"].astype("int64")),
-            pa.array(proto, type=pa.string()),
-            pa.array(
-                [int(a["src_port"][i]) if a["ports_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["dst_port"][i]) if a["ports_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["mm_ts"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int64(),
-            ),
-            pa.array(
-                [int(a["mm_id"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int32(),
-            ),
-            pa.array(
-                [int(a["mm_port"][i]) if a["mm_valid"][i] else None for i in range(n)],
-                type=pa.int16(),
-            ),
+            _protocol_names(a, ipv6),
+            nullable("src_port", "ports_valid", "int32"),
+            nullable("dst_port", "ports_valid", "int32"),
+            nullable("mm_ts", "mm_valid", "int64"),
+            nullable("mm_id", "mm_valid", "int32"),
+            nullable("mm_port", "mm_valid", "int16"),
         ],
-        names=[
-            "src_ip",
-            "dst_ip",
-            "len",
-            "protocol",
-            "src_port",
-            "dst_port",
-            "mm_ts",
-            "mm_id",
-            "mm_port",
-        ],
+        names=PACKET_SCHEMA.names,
     )
+
+
+def _partition_bytes(part: PcapPartition) -> bytes:
+    """The records a partition owns, as one standalone pcap buffer."""
+    from pcap_to_parquet_spark.sources.pcap_chunked import decode_chunk
+
+    if not part.path:  # streaming no-data sentinel: a header-only capture
+        from pcap_to_parquet_spark.sources.pcap_fixtures import pcap_file
+
+        return pcap_file([])
+    if part.start <= _GLOBAL_HEADER_LEN and part.end >= os.path.getsize(part.path):
+        with open(part.path, "rb") as f:
+            return f.read()  # a whole file: no boundary to resync
+    return decode_chunk(part.path, part.start, part.end, part.ts_tol)
 
 
 class PcapBatchReader(DataSourceReader):
@@ -219,11 +210,9 @@ class PcapBatchReader(DataSourceReader):
         if not self.path:
             raise ValueError("pcap source requires a path: .load('<file-or-glob>')")
         chunk_mb = options.get("chunk_mb")
-        self.chunk_mb = int(chunk_mb) if chunk_mb is not None else None
+        self.chunk_bytes = round(float(chunk_mb) * (1 << 20)) if chunk_mb is not None else None
         tol_h = options.get("ts_tol_hours")
-        from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL
-
-        self.ts_tol = int(float(tol_h) * 3600) if tol_h is not None else _TS_TOL
+        self.ts_tol = round(float(tol_h) * 3600) if tol_h is not None else _TS_TOL
         self.ipv6 = str(options.get("ipv6", "false")).lower() == "true"
         self.pushed: list = []
 
@@ -231,10 +220,10 @@ class PcapBatchReader(DataSourceReader):
         """Accept equality/range/membership filters on the decoded
         numeric columns (len, ports, protocol). Accepted filters run as
         a vectorized numpy mask inside the decode kernel, so pruned
-        packets never become Python strings or Arrow rows; everything
-        else stays with Spark. Each accepted filter is implemented
-        EXACTLY (SQL null semantics included), so nothing accepted is
-        re-yielded for re-evaluation."""
+        packets never become Arrow rows; everything else stays with
+        Spark. Each accepted filter is implemented EXACTLY (SQL null
+        semantics included), so nothing accepted is re-yielded for
+        re-evaluation."""
         from pyspark.sql.datasource import (
             EqualTo,
             GreaterThan,
@@ -260,32 +249,19 @@ class PcapBatchReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[PcapPartition]:
-        from pcap_to_parquet_spark.sources.pcap import _AUTO_CHUNK_THRESHOLD
-        from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs
+        from pcap_to_parquet_spark.sources.pcap_chunked import capture_files, chunk_specs
 
-        if self.chunk_mb == 0:
-            chunk_bytes = 1 << 62  # one partition per file
-        elif self.chunk_mb is None:
-            chunk_bytes = _AUTO_CHUNK_THRESHOLD  # auto: big files split
-        else:
-            chunk_bytes = self.chunk_mb << 20
+        chunk_bytes = self.chunk_bytes
+        if chunk_bytes is None:
+            size = max(os.path.getsize(f) for f in capture_files(self.path))
+            chunk_bytes = _auto_chunk_bytes(size, None)
         return [
             PcapPartition(p, s, e, self.ts_tol)
             for p, s, e in chunk_specs(self.path, chunk_bytes)
         ]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        from pcap_to_parquet_spark.sources.pcap_chunked import decode_chunk
-
-        size = os.path.getsize(partition.path)
-        if partition.start == 0 and partition.end >= size:
-            with open(partition.path, "rb") as f:
-                buf = f.read()
-        else:
-            buf = decode_chunk(
-                partition.path, partition.start, partition.end, partition.ts_tol
-            )
-        yield _decode_to_arrow(buf, self.pushed, self.ipv6)
+        yield _decode_to_arrow(_partition_bytes(partition), self.pushed, self.ipv6)
 
 
 class PcapStreamReader(DataSourceStreamReader):
@@ -311,8 +287,6 @@ class PcapStreamReader(DataSourceStreamReader):
         return {"files": self._list()}
 
     def partitions(self, start: dict, end: dict) -> Sequence[PcapPartition]:
-        from pcap_to_parquet_spark.sources.pcap_chunked import _TS_TOL
-
         new = [f for f in end["files"] if f not in set(start["files"])]
         if not new:
             # NO-DATA batch (same offset both ends): the engine plans
@@ -324,20 +298,14 @@ class PcapStreamReader(DataSourceStreamReader):
         return [PcapPartition(f, 0, 1 << 62, _TS_TOL) for f in new]
 
     def read(self, partition: PcapPartition) -> Iterator:  # type: ignore[override]
-        if not partition.path:  # no-data sentinel: header-only capture
-            from pcap_to_parquet_spark.sources.pcap_fixtures import pcap_file
-
-            yield _decode_to_arrow(pcap_file([]), ipv6=self.ipv6)
-            return
-        with open(partition.path, "rb") as f:
-            yield _decode_to_arrow(f.read(), ipv6=self.ipv6)
+        yield _decode_to_arrow(_partition_bytes(partition), ipv6=self.ipv6)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are checkpointed by the engine; nothing to clean
 
 
 def render_packet_record(r):  # type: ignore[no-untyped-def]
-    """One PACKET_DDL row → a (ts_sec, origlen, frame_bytes) pcap
+    """One PACKET_SCHEMA row → a (ts_sec, origlen, frame_bytes) pcap
     record whose re-decode returns exactly the row.
 
     The decoder anchors trailers at ORIGLEN (main.rs:92,138): render
@@ -421,8 +389,8 @@ class PcapDataSource(DataSource):
     def name(cls) -> str:
         return "pcap"
 
-    def schema(self) -> str:
-        return PACKET_DDL
+    def schema(self):  # type: ignore[no-untyped-def]
+        return PACKET_SCHEMA
 
     def reader(self, schema) -> PcapBatchReader:  # type: ignore[no-untyped-def]
         return PcapBatchReader(self.options)

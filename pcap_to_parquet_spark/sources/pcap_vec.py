@@ -26,6 +26,8 @@ import numpy as np
 from pcap_to_parquet_spark.sources.pcap import (
     _GLOBAL_HEADER_LEN,
     _MAGICS,
+    _PROTOCOL_NAMES,
+    _PROTOCOL_NAMES_V6,
     _RECORD_HEADER_LEN,
     PcapFormatError,
     _parse_metamako_trailer,
@@ -100,9 +102,9 @@ def _row_chunks(width: np.ndarray, budget: int = 8_000_000):
 
 def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     """Decode a whole pcap to columnar arrays (PACKET_SCHEMA fields,
-    IPs as u32 + validity mask so string formatting can happen
-    JVM-side). Returns dict of numpy arrays + boolean ``*_valid``
-    masks for nullable fields.
+    IPs as u32 + validity mask, formatted by the Arrow finisher in
+    sources/pcap_datasource.py). Returns dict of numpy arrays +
+    boolean ``*_valid`` masks for nullable fields.
 
     ``ipv6=True`` (opt-in engine extension; default = reference
     parity, 0x86DD stays NULL) adds object-array keys ``src6``,
@@ -113,7 +115,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     (lockstep masked hops); only the per-row
     address TEXT formatting is Python, and only over v6 rows — the
     zero-run compression of RFC 5952 is data-dependent string work
-    the JVM side can't codegen from a pair of int64 halves."""
+    no columnar kernel does from a pair of int64 halves."""
     off, ts, incl, orig = scan_record_offsets(buf)
     n = len(off)
     B = np.frombuffer(buf, dtype=np.uint8)
@@ -143,7 +145,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
     proto = at(ip_off + 9, ip_ok)
     src_u32 = be(ip_off + 12, 4, ip_ok)
     dst_u32 = be(ip_off + 16, 4, ip_ok)
-    named = ip_ok & np.isin(proto, (1, 2, 6, 17))
+    named = ip_ok & np.isin(proto, tuple(_PROTOCOL_NAMES))
     is_l4 = ip_ok & np.isin(proto, (6, 17))
     l4_off = ip_off + ihl
     ports_ok = is_l4 & ((off + incl - l4_off) >= 4)
@@ -194,7 +196,6 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
         src_port = np.where(ports6_ok, be(l4_off6, 2, ports6_ok), src_port)
         dst_port = np.where(ports6_ok, be(l4_off6 + 2, 2, ports6_ok), dst_port)
         ports_ok = ports_ok | ports6_ok
-        names6 = {6: "TCP", 17: "UDP", 58: "ICMPv6"}
         src6 = np.full(n, None, dtype=object)
         dst6 = np.full(n, None, dtype=object)
         proto6 = np.full(n, None, dtype=object)
@@ -219,7 +220,7 @@ def decode_pcap_arrays(buf: bytes, ipv6: bool = False) -> dict[str, np.ndarray]:
                 a = int(ip_off[i])
                 src6[i] = fmt(buf[a + 8 : a + 24])
                 dst6[i] = fmt(buf[a + 24 : a + 40])
-            for code, name in names6.items():
+            for code, name in _PROTOCOL_NAMES_V6.items():
                 proto6[rows6[nh[rows6] == code]] = name
         v6_extra = {"src6": src6, "dst6": dst6, "proto6": proto6}
 

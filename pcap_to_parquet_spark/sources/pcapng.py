@@ -152,32 +152,24 @@ def reframe_legacy(raw: bytes) -> bytes:
 
 
 def read_pcapng(spark: SparkSession, path: str, ipv6: bool = False) -> DataFrame:
-    """pcapng file(s)/glob → packets DataFrame (PACKET_SCHEMA), through
-    the vectorized decoder: the block walk re-frames each file into the
-    legacy record layout in-memory (``reframe_legacy``), then
-    ``decode_pcap_arrays`` runs unchanged (one synthetic buffer per
-    file; columnar from there). ``ipv6=True`` enables the opt-in v6
+    """pcapng file(s)/glob → packets DataFrame (PACKET_SCHEMA), one task
+    per file: pcapng has no record-header chain to resync a byte-range
+    chunk on, so the block walk stays per file. It re-frames each file
+    into the legacy record layout in-memory (``reframe_legacy``), then
+    the legacy reader's decode and Arrow finisher run unchanged and
+    emit through ``mapInArrow``. ``ipv6=True`` enables the opt-in v6
     decode exactly as in ``read_pcap`` (default = reference parity)."""
+    from pcap_to_parquet_spark.schema import PACKET_SCHEMA
     from pcap_to_parquet_spark.session import tune
-    from pcap_to_parquet_spark.sources.pcap import (
-        _RAW_DECODE_SCHEMA,
-        _RAW_DECODE_SCHEMA_V6,
-        _arrays_to_pandas,
-        _finish_packets,
-    )
 
     tune(spark)
     files = spark.read.format("binaryFile").load(path).select("content")
 
     def decode_files(batches):  # type: ignore[no-untyped-def]
-        from pcap_to_parquet_spark.sources.pcap_vec import decode_pcap_arrays
+        from pcap_to_parquet_spark.sources.pcap_datasource import _decode_to_arrow
 
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield _arrays_to_pandas(
-                    decode_pcap_arrays(reframe_legacy(bytes(content)), ipv6)
-                )
+        for batch in batches:
+            for content in batch.column("content"):
+                yield _decode_to_arrow(reframe_legacy(content.as_py()), ipv6=ipv6)
 
-    schema = _RAW_DECODE_SCHEMA_V6 if ipv6 else _RAW_DECODE_SCHEMA
-    raw = files.mapInPandas(decode_files, schema=schema)
-    return _finish_packets(raw, ipv6)
+    return files.mapInArrow(decode_files, schema=PACKET_SCHEMA)

@@ -1,4 +1,4 @@
-"""Chunked pcap reader: chunked == unchunked, at every boundary."""
+"""Chunked pcap reads: chunked == unchunked, at every boundary."""
 
 from __future__ import annotations
 
@@ -6,12 +6,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes
-from pcap_to_parquet_spark.sources.pcap_chunked import (
-    chunk_specs,
-    decode_chunk,
-    read_pcap_chunked,
-)
+from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes, read_pcap
+from pcap_to_parquet_spark.sources.pcap_chunked import chunk_specs, decode_chunk
 from pcap_to_parquet_spark.sources.pcap_fixtures import (
     BASE_TS,
     eth,
@@ -119,33 +115,63 @@ def test_truncated_tail_still_silent(tmp_path):
 
 
 def test_convert_auto_chunk_policy(spark, tmp_path, monkeypatch):
-    """convert_pcap auto-selects: per-file below the threshold, chunked
-    above it — and the chunked output is row-identical."""
+    """One function sizes chunks from (file size, parallelism): whole
+    files up to the threshold, else the records split into
+    ``parallelism`` equal chunks floored at ``_MIN_CHUNK``; without a
+    session, threshold-sized chunks. Auto output is row-identical to
+    whole-file output."""
     import duckdb
 
     from pcap_to_parquet_spark.sources import pcap as pcap_mod
 
     buf = _mixed_pcap(300)
+    assert len(buf) == 21824
     p = tmp_path / "cap.pcap"
     p.write_bytes(buf)
-    assert pcap_mod._auto_chunk_bytes(spark, str(p)) is None  # small file
+    for par in (4, 32, None):
+        assert pcap_mod._auto_chunk_bytes(len(buf), par) == 0  # small file: whole
 
     monkeypatch.setattr(pcap_mod, "_AUTO_CHUNK_THRESHOLD", 1024)
     monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 2048)
-    cb = pcap_mod._auto_chunk_bytes(spark, str(p))
-    assert cb == 2048  # floor wins over size/parallelism
+    assert pcap_mod._auto_chunk_bytes(len(buf), 4) == 5450  # (21824 - 24) / 4
+    assert pcap_mod._auto_chunk_bytes(len(buf), 32) == 2048  # floor wins over 682
+    assert pcap_mod._auto_chunk_bytes(len(buf), None) == 1024  # no session
 
     out_a = str(tmp_path / "auto")
-    out_b = str(tmp_path / "perfile")
+    out_b = str(tmp_path / "whole")
     pcap_mod.convert_pcap(spark, str(p), out_a)  # auto -> chunked
-    pcap_mod.convert_pcap(spark, str(p), out_b, chunk_bytes=0)  # forced per-file
+    pcap_mod.convert_pcap(spark, str(p), out_b, chunk_bytes=0)  # forced whole-file
     q = "SELECT * FROM '{}/*.parquet' ORDER BY ALL"
     assert duckdb.sql(q.format(out_a)).fetchall() == duckdb.sql(q.format(out_b)).fetchall()
 
 
+def test_auto_chunks_one_per_core_none_empty(spark, tmp_path, monkeypatch):
+    """An auto-chunked read of a capture cut into k = defaultParallelism
+    chunks has k partitions, none of them empty: one chunk per
+    partition, never two chunks on one core while another idles."""
+    from pcap_to_parquet_spark.sources import pcap as pcap_mod
+    from pcap_to_parquet_spark.sources.pcap_datasource import PcapBatchReader
+
+    k = spark.sparkContext.defaultParallelism
+    buf = _mixed_pcap(5000)
+    p = tmp_path / "cap.pcap"
+    p.write_bytes(buf)
+    monkeypatch.setattr(pcap_mod, "_AUTO_CHUNK_THRESHOLD", 1024)
+    monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 2048)
+    cb = pcap_mod._auto_chunk_bytes(len(buf), k)
+    assert len(chunk_specs(str(p), cb)) == k
+    # read_pcap hands the size over as fractional MiB: exact to the byte
+    reader = PcapBatchReader({"path": str(p), "chunk_mb": repr(cb / (1 << 20))})
+    assert reader.chunk_bytes == cb
+    per_partition = read_pcap(spark, str(p)).rdd.glom().map(len).collect()
+    assert len(per_partition) == k
+    assert min(per_partition) > 0
+    assert sum(per_partition) == 5000
+
+
 def test_convert_auto_falls_back_on_resync_error(spark, tmp_path, monkeypatch):
     """A valid capture spanning more than ±ts_tol fails the chunked
-    reader's resync — the AUTO path must fall back to per-file decode
+    read's resync — the AUTO path must fall back to whole-file decode
     and succeed; an explicit chunk_bytes keeps fail-loud."""
     import duckdb
 
@@ -160,7 +186,7 @@ def test_convert_auto_falls_back_on_resync_error(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(pcap_mod, "_AUTO_CHUNK_THRESHOLD", 256)
     monkeypatch.setattr(pcap_mod, "_MIN_CHUNK", 512)
     out = str(tmp_path / "auto_fallback")
-    pcap_mod.convert_pcap(spark, str(p), out)  # auto: chunked fails -> per-file
+    pcap_mod.convert_pcap(spark, str(p), out)  # auto: chunked fails -> whole-file
     got = duckdb.sql(f"SELECT COUNT(*) FROM '{out}/*.parquet'").fetchone()[0]
     assert got == 60
 
@@ -172,7 +198,8 @@ def test_spark_chunked_reader(spark, tmp_path):
     buf = _mixed_pcap(5000)
     p = tmp_path / "big.pcap"
     p.write_bytes(buf)
-    df = read_pcap_chunked(spark, str(p), chunk_bytes=50_000)
+    df = read_pcap(spark, str(p), chunk_bytes=50_000)
+    assert df.rdd.getNumPartitions() == len(chunk_specs(str(p), 50_000)) > 1
     rows = sorted(tuple(r) for r in df.collect())
     want = sorted(
         tuple(r.values()) for r in decode_pcap_bytes(buf)

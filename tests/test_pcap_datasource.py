@@ -1,5 +1,5 @@
-"""pcap Python DataSource: parity with read_pcap, chunked partitions,
-streaming directory tail."""
+"""pcap Python DataSource: parity with the scalar reference decoder,
+chunked partitions, streaming directory tail."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import os
 
 import pytest
 
-from pcap_to_parquet_spark.sources.pcap import read_pcap
+from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes
 from pcap_to_parquet_spark.sources.pcap_datasource import register_pcap_source
 from pcap_to_parquet_spark.sources.pcap_fixtures import (
     BASE_TS,
@@ -29,6 +29,11 @@ def _rows(df):
     return sorted((tuple(r) for r in df.collect()), key=_key)
 
 
+def _scalar_rows(buf, keep=lambda r: True):  # noqa: ANN001
+    """The scalar reference decode, optionally filtered in Python."""
+    return sorted((tuple(r.values()) for r in decode_pcap_bytes(buf) if keep(r)), key=_key)
+
+
 def _mixed_pcap(n: int) -> bytes:
     udp_f = eth(ipv4(17, "10.0.0.1", "10.0.0.2", udp(1234, 5678)))
     tcp_f = eth(ipv4(6, "192.168.1.10", "192.168.1.20", tcp(80, 443)))
@@ -38,12 +43,12 @@ def _mixed_pcap(n: int) -> bytes:
 
 
 @pytest.mark.slow  # >=5s: deselected from the default driver-verify run
-def test_datasource_matches_read_pcap_on_golden(spark, tmp_path):
+def test_datasource_matches_scalar_decode_on_golden(spark, tmp_path):
     register_pcap_source(spark)
     p = tmp_path / "golden.pcap"
     p.write_bytes(golden_pcap_bytes())
     got = _rows(spark.read.format("pcap").load(str(p)))
-    want = _rows(read_pcap(spark, str(p)))
+    want = _scalar_rows(golden_pcap_bytes())
     assert got == want and len(got) == 13
 
 
@@ -96,7 +101,7 @@ def test_datasource_streaming_tails_directory(spark, tmp_path):
 @pytest.mark.slow  # >=5s: deselected from the default driver-verify run
 def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     """Pushed filters (ports/len/protocol) return exactly what the
-    plain reader + Spark-side filter returns — incl. SQL null
+    scalar reference decode + a Python filter returns — incl. SQL null
     semantics (a NULL port never matches a comparison) — and
     unsupported filters are yielded back as residuals."""
     from pyspark.sql import functions as F
@@ -106,19 +111,22 @@ def test_datasource_filter_pushdown_parity_and_residual(spark, tmp_path):
     p = tmp_path / "golden.pcap"
     p.write_bytes(golden_pcap_bytes())
     ds = spark.read.format("pcap").load(str(p))
-    plain = read_pcap(spark, str(p))
 
     cases = [
-        F.col("protocol") == "TCP",
-        F.col("protocol").isin("TCP", "UDP"),
-        (F.col("src_port") > 1000) & (F.col("len") <= 100),
-        F.col("dst_port").isNotNull(),
-        F.col("protocol").isNotNull(),  # GRE packet: proto number, no name
+        (F.col("protocol") == "TCP", lambda r: r["protocol"] == "TCP"),
+        (F.col("protocol").isin("TCP", "UDP"), lambda r: r["protocol"] in ("TCP", "UDP")),
+        (
+            (F.col("src_port") > 1000) & (F.col("len") <= 100),
+            lambda r: r["src_port"] is not None and r["src_port"] > 1000 and r["len"] <= 100,
+        ),
+        (F.col("dst_port").isNotNull(), lambda r: r["dst_port"] is not None),
+        # GRE packet: proto number, no name
+        (F.col("protocol").isNotNull(), lambda r: r["protocol"] is not None),
     ]
-    for cond in cases:
+    for cond, keep in cases:
         got = _rows(ds.filter(cond))
-        want = _rows(plain.filter(cond))
-        assert got == want, str(cond)
+        want = _scalar_rows(golden_pcap_bytes(), keep)
+        assert got == want and got, str(cond)
     # fully-pushed equality leaves no post-scan Filter node
     plan = ds.filter(F.col("protocol") == "TCP")._jdf.queryExecution()
     # no Filter OPERATOR above the scan ("RuntimeFilters: []" in the

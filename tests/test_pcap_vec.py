@@ -24,7 +24,7 @@ _PROTO = {1: "ICMP", 2: "IGMP", 6: "TCP", 17: "UDP"}
 
 def rows_from_arrays(buf: bytes) -> list[dict]:
     """Arrays+masks → the scalar decoder's row-dict shape (mirrors the
-    JVM-side finishing in read_pcap)."""
+    Arrow finisher behind read_pcap)."""
     a = decode_pcap_arrays(buf)
 
     def quad(u32: int) -> str:

@@ -22,7 +22,6 @@ from pcap_to_parquet_spark.sources.pcap import decode_pcap_bytes, read_pcap  # n
 from pcap_to_parquet_spark.sources.pcap_chunked import (  # noqa: E402
     chunk_specs,
     decode_chunk,
-    read_pcap_chunked,
 )
 from pcap_to_parquet_spark.sources.pcap_fixtures import (  # noqa: E402
     v6_golden_pcap_bytes,
@@ -378,26 +377,24 @@ def test_band_survivors_keep_longest(spark, tmp_path):
 
 
 def test_spark_chunked_v6_equals_per_file(spark, tmp_path):
-    """read_pcap_chunked(ipv6=True) row-set == read_pcap(ipv6=True) on
-    the v6 fixture (forced small chunks → real resync on executors)."""
+    """read_pcap(chunk_bytes=128, ipv6=True) row-set == the scalar
+    whole-file decode_pcap_bytes(ipv6=True) on the v6 fixture (forced
+    small chunks → real resync on executors)."""
     buf = v6_golden_pcap_bytes()
     p = tmp_path / "v6.pcap"
     p.write_bytes(buf)
     key = lambda r: (r["len"], r["src_ip"] or "", r["src_port"] or -1)  # noqa: E731
     chunked = sorted(
-        (r.asDict() for r in read_pcap_chunked(
+        (r.asDict() for r in read_pcap(
             spark, str(p), chunk_bytes=128, ipv6=True).collect()),
         key=key,
     )
-    per_file = sorted(
-        (r.asDict() for r in read_pcap(spark, str(p), ipv6=True).collect()),
-        key=key,
-    )
+    per_file = sorted(decode_pcap_bytes(buf, ipv6=True), key=key)
     assert chunked == per_file
     assert any(r["src_ip"] and ":" in r["src_ip"] for r in chunked)
-    # default (no flag): chunked reader keeps byte-identical parity
+    # default (no flag): chunked reads keep byte-identical parity
     parity_chunked = sorted(
-        (r.asDict() for r in read_pcap_chunked(spark, str(p), chunk_bytes=128).collect()),
+        (r.asDict() for r in read_pcap(spark, str(p), chunk_bytes=128).collect()),
         key=lambda r: r["len"],
     )
     parity_ref = sorted(decode_pcap_bytes(buf), key=lambda r: r["len"])
